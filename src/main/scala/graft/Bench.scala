@@ -1,6 +1,29 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One bench run: per-query seconds plus the run's context. */
+  final case class Record(queries: Seq[(String, Double)], failed: Seq[String],
+      indexBuildSec: Double, gate: String, loadPre: Double, probePre: Double,
+      loadavg: Double, probeSec: Double, sf: String) {
+    /** The record as one JSON line, every float printed by `fmt`. */
+    def json(fmt: Double => String): String = {
+      val qs = queries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${fmt(queries.map(_._2).sum)},"unit":"sec","queries":$qs,"failed":$fs,"index_build_sec":${fmt(indexBuildSec)},"ambient_gate":"$gate","loadavg_pre":${fmt(loadPre)},"probe_64mib_pre":${fmt(probePre)},"loadavg":${fmt(loadavg)},"probe_64mib_sec":${fmt(probeSec)},"sf":"$sf"}"""
+    }
+  }
+
+  /** The printed line rounds every float to 4 decimals: at full double
+    * precision the 137-query line is ~9 KB and overflows a log-tail
+    * capture (both BENCH_r12/r13 have parsed:null for exactly this
+    * reason) — 0.1 ms resolution is far below bench noise and cuts the
+    * line ~3×. The $SPARK_GRAFT_BENCH_OUT file keeps full
+    * precision. `Locale.ROOT`: under a comma-decimal default locale
+    * `%.4f` would print `0,1234` and the line would not parse.
+    */
+  def rounded(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
+
   /** Force FULL evaluation of every output column: `count()` lets
     * Catalyst prune the projections (a map-only query would be timed as
     * a bare parquet scan); the noop sink evaluates each row's columns
@@ -152,29 +175,17 @@ object Bench {
         }
         name -> times.min
     }
-    val total = results.map(_._2).sum
-    val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
     val (loadavg, probeSec) = machineProbe(sfDir)
-    // The printed one-line JSON rounds every float to 4 decimals: at full
-    // double precision the 137-query line is ~9 KB and overflows the
-    // driver's log-tail capture (both BENCH_r12/r13 have parsed:null for
-    // exactly this reason) — 0.1 ms resolution is far below bench noise
-    // and cuts the line ~3×. The $SPARK_GRAFT_BENCH_OUT file keeps full
-    // precision. Same timings, same methodology; only the printed
-    // formatting changed (round-14 measurement-contract fix).
-    def render(fmt: Double => String): String = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"index_build_sec":${fmt(idxSec)},"ambient_gate":"$gate","loadavg_pre":${fmt(loadPre)},"probe_64mib_pre":${fmt(probePre)},"loadavg":${fmt(loadavg)},"probe_64mib_sec":${fmt(probeSec)},"sf":"$sfDir"}"""
-    }
-    println(render(v => f"$v%.4f"))
+    val record = Record(results, failed.reverse, idxSec, gate, loadPre,
+      probePre, loadavg, probeSec, sfDir)
+    println(record.json(rounded))
     // ALSO write the line to a file: the driver's bench artifact keeps
     // only a truncated log tail, which loses the first half of the
     // per-query record — the file is the complete, parseable copy
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (render(_.toString) + "\n").getBytes("UTF-8"))
+      (record.json(_.toString) + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: $e") }
     spark.stop()

@@ -1,15 +1,41 @@
 package graft
 
-/** One switch for every per-(session, sfDir) stored-index cache in the
-  * engine — the checkpoint-cached artifacts a production lake would
-  * materialize at ingest (blocker TF/entries, resolver score table,
-  * wikidata snak table, trained IVF centroids, PQ codes, banded
-  * corpus, winnow fingerprints, BPE merges). A long-lived session
-  * iterating regenerated data directories calls this between dirs;
-  * otherwise every cache would pin its checkpoints for the session's
-  * lifetime and a regenerated dir would keep serving its stale index.
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** The session-artifact registry: every value the engine keeps per
+  * (session, sfDir) between queries — lake-artifact scans, pins and
+  * checkpoints of them, table readers, collected scalars — lives in ONE
+  * map keyed by (session, sfDir, name), behind [[session]]. It owns:
+  *  - eviction: every access first drops the entries of sessions whose
+  *    context has stopped, so a JVM cycling SparkSessions retains none;
+  *  - unpersist on clear: [[clearAll]] unpersists each DataFrame it
+  *    drops, so a regenerated dir leaves no pins in the CacheManager
+  *    (localCheckpoint blocks are not CacheManager entries);
+  *  - nested builds: `TrieMap.getOrElseUpdate` builds outside any lock
+  *    and keeps the first value published, so a builder may read other
+  *    entries (LSH pairs → shingles, trained centroids → IVF modulus,
+  *    postings stats and BPE merges → postings). A
+  *    `ConcurrentHashMap.computeIfAbsent` map throws `Recursive update`
+  *    on those nested builds under `ensureAll`'s concurrent ingest.
+  * A long-lived session iterating regenerated data dirs calls
+  * [[clearAll]] between dirs, else it keeps serving stale values.
   */
 object Caches {
+
+  private[graft] val registry = TrieMap.empty[(SparkSession, String, String), Any]
+
+  /** Read-or-build the session value `name` for data dir `d`. Names
+    * are shared by every module, so a value layered over a lake
+    * artifact (a pin, a checkpoint, collected scalars) takes its own
+    * name, never the artifact's.
+    */
+  def session[T](s: SparkSession, d: String, name: String)(build: => T): T = {
+    registry.keys.foreach(k =>
+      if (k._1.sparkContext.isStopped) registry.remove(k))
+    registry.getOrElseUpdate((s, d, name), build).asInstanceOf[T]
+  }
 
   /** Session-pin a multiply-consumed frame: eager persist (one parallel
     * materialization job; every consumer then reads the cache) with
@@ -26,9 +52,7 @@ object Caches {
     * once and read back at page-cache speed with zero heap footprint
     * — the xref scored-table rationale, applied session-wide.
     */
-  def pin(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    if (sys.env.contains("GRAFT_NO_PIN")) return df // A/B diagnostics
+  def pin(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     df.count()
     df
@@ -47,19 +71,18 @@ object Caches {
     * seconds).
     */
 
+  /** Drop every in-session value (unpersisting live sessions' frames),
+    * the data-dir fingerprints and Propose's scaffold pins. The lake
+    * files stay: they key on the data fingerprint.
+    */
   def clearAll(): Unit = {
-    Tables.clearMemo()
-    blocker.BlockerQueries.clearTfCache()
-    resolver.ResolverQueries.clearCache()
-    enrich.WikidataQueries.clearCache()
+    for (k <- registry.keys; v <- registry.remove(k)) v match {
+      case df: Dataset[_] if !k._1.sparkContext.isStopped =>
+        df.unpersist(blocking = false)
+      case _ =>
+    }
+    IndexLake.fpMemo.clear()
     enrich.Propose.clearCache()
-    similarity.KMeans.clearCache()
-    similarity.Pq.clearCache()
-    similarity.SimilarityQueries.clearCache()
-    dedup.DedupQueries.clearCache()
-    textanalysis.Bpe.clearCache()
-    search.Search.clearCache()
-    IndexLake.clearMemo()
   }
 
   /** Build and publish every stored-index artifact for a data dir —
@@ -68,7 +91,7 @@ object Caches {
     * below is read-or-build, so re-running on an unchanged dir is a
     * no-op; a regenerated dir re-keys the fingerprint and rebuilds.
     */
-  def ensureAll(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+  def ensureAll(s: SparkSession, d: String): Unit = {
     val builds: Seq[() => Any] = Seq(
       () => blocker.BlockerQueries.entriesCk(s, d),
       () => blocker.BlockerQueries.tfCk(s, d),

@@ -538,17 +538,14 @@ object DedupQueries {
   // read-once-then-cache on top of the lake artifact (the near_banded
   // pattern): the winnow/spans queries fan each table out several ways
   // and the arrays decode expensively from parquet per consumer
-  private val fpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
   def fpSetsCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "sets"), graft.Caches.pin(
+    graft.Caches.session(s, d, "fp_sets.pin")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "fp_sets")(
         graft.textanalysis.TextAnalysis.fingerprintSets(
           Tables.documents(s, d)))))
 
   def fpPosCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "pos"), graft.Caches.pin(
+    graft.Caches.session(s, d, "fp_pos.pin")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "fp_pos")(
         graft.textanalysis.TextAnalysis.fingerprintPositions(
           Tables.documents(s, d)))))
@@ -570,7 +567,7 @@ object DedupQueries {
     * blocks holding the only copy mid-pipeline.
     */
   def shinglesCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "shingles"), graft.Caches.pin(
+    graft.Caches.session(s, d, "shingles.pin")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "shingles")(
         hashedShinglesOf(scattered(s, d)))))
 
@@ -578,7 +575,7 @@ object DedupQueries {
     * artifact — the char-channel sibling of [[shinglesCk]].
     */
   def charGramsCk(s: SparkSession, d: String): DataFrame =
-    fpCache.getOrElseUpdate((s, d, "char_grams"), graft.Caches.pin(
+    graft.Caches.session(s, d, "char_grams.pin")(graft.Caches.pin(
       graft.IndexLake.artifact(s, d, "char_grams") {
         val n = CharGramN
         // one pass: char array → codes (lambda only touches its own
@@ -613,12 +610,6 @@ object DedupQueries {
   def substrPosCk(s: SparkSession, d: String): DataFrame =
     graft.IndexLake.artifact(s, d, "substr_pos")(
       substrPosOf(scattered(s, d)))
-
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = {
-    fpCache.clear()
-    graft.IndexLake.clearMemo()
-  }
 
   def winnowPairsQ(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

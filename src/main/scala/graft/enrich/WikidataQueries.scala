@@ -189,19 +189,11 @@ object WikidataQueries {
     persons.unionByName(s.createDataset(auxDocs).toDF("doc"))
   }
 
-  /** The parsed snak table feeds ~8 downstream branches (labels, names,
-    * qualifiers, claims, descriptions, sitelinks, instance gate); without
-    * materializing it each branch would re-run doc generation + parse.
-    * At scale this is the "parse the dump once, keep the snak table"
-    * step — a real pipeline would write it to Parquet.
-    */
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = graft.IndexLake.clearMemo()
-
   /** Parsed snak table as a lake artifact, shared by the statement and
-    * relationship transforms — the "parse the dump once, keep the snak
-    * table" step made literal: one parquet per data dir, parsed JSON
-    * never touched again.
+    * relationship transforms (~8 downstream branches: labels, names,
+    * qualifiers, claims, descriptions, sitelinks, instance gate) — the
+    * "parse the dump once, keep the snak table" step made literal: one
+    * parquet per data dir, parsed JSON never touched again.
     */
   def snakCk(s: SparkSession, d: String): DataFrame =
     graft.IndexLake.artifact(s, d, "wd_snaks")(Wikidata.parse(docs(s, d)))

@@ -32,9 +32,6 @@ object ResolverQueries {
   private def pairScores(s: SparkSession, d: String): DataFrame =
     pairScoresCk(s, d)
 
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = graft.IndexLake.clearMemo()
-
   private def edges(s: SparkSession, d: String): DataFrame =
     pairScores(s, d).filter(col("score") >= PositiveThreshold)
       .select(col("lid").as("src"), col("rid").as("dst"))

@@ -96,9 +96,6 @@ object Search {
       .groupBy(col("source"), col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  private val postingsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** [[postingsOf]] the document corpus as a lake artifact — the
     * postings table is the retrieval family's stored index (what the
     * bm25Of scaladoc's production note promises): built once when data
@@ -106,7 +103,7 @@ object Search {
     * read-once-then-cache session copy like the blocker TF table.
     */
   def postingsCk(s: SparkSession, d: String): DataFrame =
-    postingsCache.getOrElseUpdate((s, d),
+    graft.Caches.session(s, d, "postings.pin")(
       // Caches.pin, not localCheckpoint: the session copy of a
       // corpus-sized table belongs on local disk with lineage retained
       // (recoverable after executor loss; zero heap footprint — the
@@ -130,9 +127,6 @@ object Search {
             col("doc_id"))))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
 
-  private val statsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, Double)]
-
   /** (n_docs, avgdl) of the postings corpus as a one-row lake artifact
     * plus a per-session scalar memo: corpus statistics are INGEST
     * outputs, not query work. Before this, every hybrid invocation ran
@@ -151,12 +145,10 @@ object Search {
 
   /** The collected (n_docs, avgdl) scalars, memoized per session+dir. */
   def postingsStats(s: SparkSession, d: String): (Long, Double) =
-    statsCache.getOrElseUpdate((s, d), {
+    graft.Caches.session(s, d, "postings_stats.scalars") {
       val r = postingsStatsCk(s, d).head()
       (r.getLong(r.fieldIndex("n_docs")), r.getDouble(r.fieldIndex("avgdl")))
-    })
-
-  def clearCache(): Unit = { postingsCache.clear(); statsCache.clear() }
+    }
 
   def bm25Core(s: SparkSession, tf: DataFrame,
       queryTerms: Seq[(Int, String)],

@@ -121,9 +121,6 @@ object Pq {
     (codebook, codes)
   }
 
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = graft.IndexLake.clearMemo()
-
   /** ADC shortlist size multiplier for [[pqRerankTopK]]: the exact
     * re-rank reads full vectors for TopK×this candidates per query.
     * Swept r11 at sf0.01: factor 3/5/8 → recall 0.68/0.81/0.91 with

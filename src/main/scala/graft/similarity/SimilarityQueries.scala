@@ -61,9 +61,6 @@ object SimilarityQueries {
       .repartition(col("vec_id"))
   }
 
-  private val nearCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** [[nearPrepared]] as a lake artifact — the banded corpus is a
     * stored index at scale (vectors are signed against the hyperplanes
     * at ingest, like PQ codes and the blocker TF table), and three
@@ -75,7 +72,7 @@ object SimilarityQueries {
     * measured 2.5× on the whole near family at sf0.1).
     */
   def nearPreparedCk(s: SparkSession, d: String): DataFrame =
-    nearCache.getOrElseUpdate((s, d),
+    graft.Caches.session(s, d, "near_banded.checkpoint")(
       // localCheckpoint, NOT a persist-level pin: df.persist at ANY
       // level stores columnar batches that re-DECODE the vector arrays
       // on every scan (measured: q_sim_clusters 0.93 s checkpointed vs
@@ -86,12 +83,6 @@ object SimilarityQueries {
       graft.IndexLake.artifact(s, d, "near_banded")(nearPrepared(s, d))
         .repartition(col("vec_id"))
         .localCheckpoint(true))
-
-  /** Drop the in-session artifact memo (see graft.IndexLake). */
-  def clearCache(): Unit = {
-    nearCache.clear()
-    graft.IndexLake.clearMemo()
-  }
 
   /** Band-equality candidate pairs (a < b, distinct) — never an
     * all-pairs join; shared by the fp and int8 verify paths.
@@ -177,15 +168,12 @@ object SimilarityQueries {
     * (same IEEE sqrt, same integer division), so the seed set is
     * engine-independent. Memoized per (session, dir): one count job.
     */
-  private val modCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Int]
-
   def centroidMod(s: SparkSession, d: String): Int =
-    modCache.getOrElseUpdate((s, d), {
+    graft.Caches.session(s, d, "centroid_mod") {
       val n = graft.Tables.embeddings(s, d).count()
       val c = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
       math.max(2L, n / c).toInt
-    })
+    }
 
   /** SQL twin of [[centroidMod]] for the oracles (DuckDB `//` is
     * integer division).

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The stored-index lake: artifacts publish to disk once, later
@@ -36,11 +38,11 @@ class CachesSpec extends AnyFunSuite {
       for (n <- names)
         assert(Files.exists(Paths.get(tmp, fp, n, "_SUCCESS")),
           s"artifact $n not published")
-      // a fresh memo (new session would do the same) reads the artifact
+      // a fresh registry (new session would do the same) reads the artifact
       // and the result matches a from-scratch rebuild bit-for-bit
       val viaDisk = blocker.BlockerQueries.tfCk(spark, dir)
         .orderBy("field", "token", "id").collect().toSeq
-      IndexLake.clearMemo()
+      Caches.clearAll()
       val reread = blocker.BlockerQueries.tfCk(spark, dir)
         .orderBy("field", "token", "id").collect().toSeq
       assert(viaDisk === reread)
@@ -66,7 +68,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-partial").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       // plant a garbage directory where the artifact would live,
       // WITHOUT the _SUCCESS marker — a crashed writer's leftovers
@@ -84,7 +86,7 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -92,7 +94,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-race").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
@@ -113,7 +115,7 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -123,19 +125,19 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-uri").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", s"file:$tmp")
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       val viaLake = blocker.BlockerQueries.tfCk(spark, dir).count()
       val fp = IndexLake.fingerprint(dir)
       assert(Files.exists(Paths.get(tmp, fp, "blocker_tf", "_SUCCESS")))
-      IndexLake.clearMemo()
+      Caches.clearAll()
       assert(blocker.BlockerQueries.tfCk(spark, dir).count() === viaLake)
     } finally {
       prev match {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
   }
 
@@ -143,7 +145,7 @@ class CachesSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-index-gc").toString
     val prev = sys.props.get("graft.index.dir")
     sys.props.put("graft.index.dir", tmp)
-    IndexLake.clearMemo()
+    Caches.clearAll()
     try {
       def mk(name: String, ageMs: Long): Unit = {
         val d = Paths.get(tmp, name, "some_artifact")
@@ -169,8 +171,51 @@ class CachesSpec extends AnyFunSuite {
         case Some(v) => sys.props.put("graft.index.dir", v)
         case None => sys.props.remove("graft.index.dir")
       }
-      IndexLake.clearMemo()
+      Caches.clearAll()
     }
+  }
+
+  test("clearAll re-derives the IVF modulus of a regenerated dir") {
+    val tmp = Files.createTempDirectory("graft-regen")
+    val emb = tmp.resolve("embeddings.parquet")
+    try {
+      Files.copy(Paths.get(dir, "embeddings.parquet"), emb)
+      def mod(d: String) = similarity.SimilarityQueries.centroidMod(spark, d)
+      val n = Tables.embeddings(spark, dir).count()
+      assert(mod(tmp.toString) === n / math.floor(math.sqrt(n.toDouble)).toLong)
+      // regenerate the dir in place with 100 rows: 100 / ⌊√100⌋ = 10
+      val staged = tmp.resolve("staged").toString
+      Tables.embeddings(spark, dir).orderBy("vec_id").limit(100)
+        .write.parquet(staged)
+      Files.delete(emb)
+      Files.move(Paths.get(staged), emb)
+      Caches.clearAll()
+      assert(mod(tmp.toString) === 10)
+    } finally {
+      Caches.clearAll()
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
+
+  test("clearAll unpersists the session pins it drops") {
+    val fps = dedup.DedupQueries.fpSetsCk(spark, dir)
+    assert(fps.storageLevel === StorageLevel.DISK_ONLY)
+    Caches.clearAll()
+    assert(fps.storageLevel === StorageLevel.NONE)
+  }
+
+  test("the registry retains no stopped session") {
+    // the suite shares one SparkContext, so stop/restart runs in a
+    // child JVM on this JVM's classpath and flags
+    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g", "-cp",
+      sys.props("java.class.path"), "graft.SessionCycleMain", dir)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() === 0, out)
+    assert(out.contains("session-cycle ok"), out)
   }
 
   test("fingerprint tracks data-dir content") {
@@ -178,5 +223,39 @@ class CachesSpec extends AnyFunSuite {
     assert(a === IndexLake.fingerprint(dir), "fingerprint is stable")
     assert(a !== IndexLake.fingerprint("/root/testdata/sf0.01"),
       "different dirs key different artifact sets")
+  }
+}
+
+/** Child-JVM body of "the registry retains no stopped session": build a
+  * table reader and a lake artifact in session A, stop A, start B,
+  * touch the registry from B, and exit 0 only if no key holds A.
+  */
+object SessionCycleMain {
+  def main(args: Array[String]): Unit = {
+    val d = args(0)
+    sys.props.put("graft.index.dir",
+      Files.createTempDirectory("graft-index-cycle").toString)
+    def start(): SparkSession = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    val held = try {
+      val a = start()
+      a.sparkContext.setLogLevel("ERROR")
+      Tables.read(a, d, "region").count()
+      IndexLake.artifact(a, d, "cycle_probe")(a.range(3).toDF()).count()
+      require(Caches.registry.keys.exists(_._1 eq a), "A built no entry")
+      a.stop()
+      val b = start()
+      require(b ne a, "a stopped session was reused")
+      Tables.read(b, d, "region").count()
+      val h = Caches.registry.keys.filter(_._1 eq a).map(_._3).toSeq
+      b.stop()
+      h
+    } catch { case e: Throwable => e.printStackTrace(System.out); sys.exit(2) }
+    if (held.nonEmpty) {
+      println(s"stopped session still holds ${held.mkString(",")}")
+      sys.exit(1)
+    }
+    println("session-cycle ok")
+    sys.exit(0)
   }
 }
